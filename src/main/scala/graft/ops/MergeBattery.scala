@@ -166,7 +166,7 @@ object MergeBattery {
       Upsert.mergeAndWrite(s, target,
         o.select(col("o_orderkey").as("id"), col("o_orderstatus").as("status"),
           lit("old").as("src")),
-        ordersPk, fullSync = true, numBuckets = 16)
+        ordersPk, fullSync = true)
       // the feed: one parquet file per slice → one micro-batch each
       // testdata orderdates span 1995..2001 — the last slice's upper
       // bound must cover the tail or those orders silently stay 'old'.
@@ -186,7 +186,7 @@ object MergeBattery {
         val q = graft.streaming.StreamingSync.syncTable(
           s.readStream.schema(staged("1997-01-01", "1997-05-01").schema)
             .option("maxFilesPerTrigger", 1).parquet(feed),
-          target, s"$base/ckpt", ordersPk, numBuckets = 16)
+          target, s"$base/ckpt", ordersPk)
         q.awaitTermination()
         s.read.parquet(target).drop(Upsert.BucketCol).orderBy(col("id"))
       }

@@ -484,15 +484,13 @@ object StreamBattery {
       // Initial bucket count derives from feed volume (the target's
       // steady-state size is ~the replayed feed): sf-scale feeds floor
       // at 4 — fewer per-batch file writes on a merge-bound gate —
-      // while a 90× feed derives up. GRAFT_MERGE_BUCKETS overrides for
-      // A/B runs.
+      // while a 90× feed derives up.
       val q = graft.streaming.StreamingSync.start(
         s.readStream.schema(graft.source.QuadSource.schema)
           .option("maxFilesPerTrigger", 1).parquet(feed),
         Seq(Tables.intellectualEntity, Tables.schemaLicense),
         target, s"$base/ckpt",
-        numBuckets = Env.intOr("GRAFT_MERGE_BUCKETS",
-          graft.sink.Upsert.bucketsFor(dirBytes(s, feed))))
+        numBuckets = graft.sink.Upsert.bucketsFor(dirBytes(s, feed)))
       q.awaitTermination()
       val parent = s.read.parquet(s"$target/graph_intellectual_entity")
         .select(col("id"), col("schema_name"))

@@ -2,6 +2,7 @@ package graft.sink
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.model.{Tables, TableSpec}
@@ -115,39 +116,53 @@ object Upsert {
   private def bucketOf(spec: TableSpec, numBuckets: Int) =
     pmod(xxhash64(mergeKeys(spec).map(col): _*), lit(numBuckets)).cast("int")
 
-  /** Data-derived initial bucket count for a NEW bucketed target: one
-    * bucket per ~32 MB of expected staged volume, floor 4, cap 4096.
-    * The count trades rewrite granularity (each incremental merge
-    * rewrites whole touched buckets — more buckets = finer pruning)
-    * against per-merge file fan-out (every touched bucket is ≥1 file
-    * per write — a tiny table laid out over many buckets pays task and
-    * file overhead on EVERY batch). Sizing from volume the way
-    * streaming replay width derives from feed bytes keeps both ends
-    * honest: a sf-scale test table derives to the floor, a 100 TB
-    * table derives to wide pruning. Existing targets ignore this —
-    * the layout marker pins their count (see readBucketMarker). */
+  /** Bucket count for a new layout: one bucket per ~32 MB of expected
+    * staged volume, floor 4, cap 4096. The count trades rewrite
+    * granularity (each incremental merge rewrites whole touched
+    * buckets — more buckets = finer pruning) against per-merge file
+    * and listing fan-out: every touched bucket is ≥1 file per write,
+    * and reading a target of more than
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32)
+    * bucket directories starts a listing job of one empty task per
+    * directory — a tiny table laid out over many buckets pays both on
+    * EVERY batch. Sizing from volume the way streaming replay width
+    * derives from feed bytes keeps both ends honest: a sf-scale table
+    * derives to the floor, a 100 TB table derives to wide pruning.
+    * [[mergeAndWrite]] applies it to [[layoutBytes]] of the staged
+    * frame when it lays out a new target and the caller gives no count;
+    * an existing target's count is pinned by its layout marker. */
   def bucketsFor(expectedBytes: Long, floor: Int = 4,
                  perBucketBytes: Long = 32L << 20, cap: Int = 4096): Int =
-    math.max(floor,
-      math.min(cap, (expectedBytes / math.max(1L, perBucketBytes)).toInt))
+    math.max(floor, math.min(cap.toLong,
+      expectedBytes / math.max(1L, perBucketBytes)).toInt)
 
-  /** Parquet-backed upsert, partition-scoped: the target lives
-    * partitioned by `__bucket = pmod(xxhash64(mergeKey), numBuckets)`, so
-    * an incremental batch touching 0.1% of entities rewrites only the
-    * bucket directories its keys hash into — not the full snapshot. At
-    * 100 TB this is the difference between an incremental sync moving
-    * ~gigabytes and moving the whole table; the pure-merge semantics are
-    * exactly `merge` either way (same key → same bucket → target row and
-    * staged row meet inside the pruned read).
-    *
-    * Full sync (or first write) still snapshots everything via tmp-write
-    * + atomic rename (read-your-own-input safety + the dual-write
-    * ordering the reference gets from transactions,
-    * arc_db_delete_flow.py:56-61). Incremental: read ONLY touched buckets
-    * (partition pruning), merge, localCheckpoint the result (cuts the
-    * lineage that would otherwise read the path being overwritten), and
-    * dynamic-partition-overwrite just those buckets. The touched-bucket
-    * collect is bounded by `numBuckets`, never by data size. */
+  /** Bytes a new layout is sized by: the optimized plan's size estimate,
+    * capped at the summed size of the plan's distinct leaf relations. A
+    * join's estimate is the product of its sides', so a pipeline of
+    * joins over a few MB of cached quads can estimate ~1e23 B; the
+    * leaves bound what the pipeline can carry into the sink. A staged
+    * (checkpointed) leaf inherits the estimate of the plan it was cut
+    * from, so it counts the bytes its blocks hold instead. None when a
+    * leaf's size is unknown: Spark reports `spark.sql.defaultSizeInBytes`
+    * (by default Long.MaxValue) for it, which is no size at all. */
+  private[sink] def layoutBytes(df: DataFrame): Option[BigInt] = {
+    val plan = df.queryExecution.optimizedPlan
+    val leaves = plan.collectLeaves().distinctBy(_.canonicalized).map {
+      case r: LogicalRDD =>
+        r.rdd.context.getRDDStorageInfo.find(_.id == r.rdd.id)
+          .map(i => BigInt(i.memSize + i.diskSize)).getOrElse(r.stats.sizeInBytes)
+      case leaf => leaf.stats.sizeInBytes
+    }
+    val unknown = BigInt(df.sparkSession.sessionState.conf.defaultSizeInBytes)
+    if (leaves.exists(_ >= unknown)) None
+    else Some(plan.stats.sizeInBytes.min(leaves.sum))
+  }
+
+  /** Bucket count of targets laid out before counts were derived, of
+    * pre-marker targets merged with no count, and of new layouts whose
+    * staged size is unknown. */
+  val LegacyBuckets = 64
+
   /** Marker file pinning the bucket count a target was laid out with.
     * The underscore prefix keeps parquet readers from treating it as
     * data (same convention as _SUCCESS). */
@@ -197,20 +212,61 @@ object Upsert {
     }
   }
 
+  /** Parquet-backed upsert, partition-scoped: the target lives
+    * partitioned by `__bucket = pmod(xxhash64(mergeKey), buckets)`, so
+    * an incremental batch touching 0.1% of entities rewrites only the
+    * bucket directories its keys hash into — not the full snapshot. At
+    * 100 TB this is the difference between an incremental sync moving
+    * ~gigabytes and moving the whole table; the pure-merge semantics are
+    * exactly `merge` either way (same key → same bucket → target row and
+    * staged row meet inside the pruned read).
+    *
+    * Full sync (or first write) snapshots everything via tmp-write +
+    * rename (read-your-own-input safety + the dual-write ordering the
+    * reference gets from transactions, arc_db_delete_flow.py:56-61).
+    * Incremental: read ONLY touched buckets (partition pruning), merge,
+    * localCheckpoint the result (cuts the lineage that would otherwise
+    * read the path being overwritten), and dynamic-partition-overwrite
+    * just those buckets. The touched-bucket collect is bounded by the
+    * bucket count, never by data size.
+    *
+    * The bucket count follows three rules:
+    *  - a new layout (first write or full sync) uses `numBuckets` when
+    *    given, else derives it: [[bucketsFor]] of [[layoutBytes]] of
+    *    `staged` ([[LegacyBuckets]] when that size is unknown);
+    *  - an incremental merge into a target with a layout marker uses the
+    *    marker's count and ignores `numBuckets`: touched-bucket ids must
+    *    be computed under the modulus the directories were laid out
+    *    with;
+    *  - an incremental merge into a pre-marker (legacy) target uses
+    *    `numBuckets` when given, else [[LegacyBuckets]] (the historical
+    *    fixed count — a derived one could differ from the old layout and
+    *    duplicate keys), and pins it as the marker. */
   def mergeAndWrite(spark: SparkSession, path: String, staged: DataFrame,
                     spec: TableSpec, fullSync: Boolean,
-                    numBuckets: Int = 64): Unit = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val exists = fs.exists(new Path(path))
+                    numBuckets: Option[Int] = None): Unit = {
+    val target = new Path(path)
+    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val exists = fs.exists(target)
     if (!exists || fullSync) {
       val tmp = new Path(path + "__tmp")
-      staged.withColumn(BucketCol, bucketOf(spec, numBuckets))
+      val layoutBuckets = numBuckets.getOrElse(layoutBytes(staged)
+        .fold(LegacyBuckets)(b => bucketsFor(b.min(Long.MaxValue).toLong)))
+      staged.withColumn(BucketCol, bucketOf(spec, layoutBuckets))
         .write.mode("overwrite").partitionBy(BucketCol).parquet(tmp.toString)
       // Pin the layout's bucket count INSIDE the snapshot before the
-      // atomic rename, so target + marker can never be seen apart.
-      writeBucketMarker(fs, tmp, numBuckets)
-      if (exists) fs.delete(new Path(path), true)
-      fs.rename(tmp, new Path(path))
+      // rename, so target + marker can never be seen apart.
+      writeBucketMarker(fs, tmp, layoutBuckets)
+      // A failed swap leaves the complete new snapshot at `tmp`;
+      // renaming it to `path` by hand recovers the target.
+      if (exists && !fs.delete(target, true))
+        throw new java.io.IOException(
+          s"full sync: could not delete $path to replace it with $tmp " +
+            "(the new snapshot is kept there)")
+      if (!fs.rename(tmp, target))
+        throw new java.io.IOException(
+          s"full sync: could not rename $tmp to $path " +
+            "(the new snapshot is kept there)")
     } else {
       // The bucket function MUST be the one the target was laid out
       // with — an incremental caller passing a different numBuckets
@@ -220,16 +276,16 @@ object Upsert {
       // would not be read, not merged, and end up DUPLICATED across
       // two dirs. The marker makes the layout self-describing; targets
       // written before the marker existed fall back to the caller's
-      // value (the historical behavior).
-      val layoutBuckets = readBucketMarker(fs, new Path(path)) match {
+      // value or, without one, the historical fixed count.
+      val layoutBuckets = readBucketMarker(fs, target) match {
         case MarkerValid(n) => n
         case MarkerAbsent =>
-          // Upgrade legacy (pre-marker) targets in place: once the
-          // caller's value has been used to merge, it IS the layout —
-          // pin it so the target stops being vulnerable to a future
-          // mismatched caller.
-          writeBucketMarker(fs, new Path(path), numBuckets)
-          numBuckets
+          // Upgrade legacy (pre-marker) targets in place: once a count
+          // has been used to merge, it IS the layout — pin it so the
+          // target stops being vulnerable to a future mismatched caller.
+          val n = numBuckets.getOrElse(LegacyBuckets)
+          writeBucketMarker(fs, target, n)
+          n
         case MarkerInvalid(reason) =>
           // Fail loudly: merging under a guessed modulus on a target
           // whose layout is unknown is the dup-key corruption the

@@ -42,7 +42,7 @@ object StreamingSync {
           val staged = SubjectPivot.pivotAll(cached, specs)
           Tables.topoOrder(specs).foreach { spec =>
             Upsert.mergeAndWrite(spark, s"$targetDir/${sanitize(spec.name)}",
-              staged(spec.name), spec, fullSync = false, numBuckets)
+              staged(spec.name), spec, fullSync = false, Some(numBuckets))
           }
         } finally cached.unpersist()
       }
@@ -65,7 +65,7 @@ object StreamingSync {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val cached = batch.persist() // read twice: touched-bucket scan + merge
         try Upsert.mergeAndWrite(batch.sparkSession, targetPath, cached, spec,
-          fullSync = false, numBuckets)
+          fullSync = false, Some(numBuckets))
         finally cached.unpersist()
       }
       .start()

@@ -124,7 +124,7 @@ class UpsertSpec extends SparkSuite {
     val buckets = 16
     val seed = (1 to 200).map(i => (s"r$i", s"ie${i % 50}", s"v$i"))
       .toDF("id", "intellectual_entity_id", "v")
-    Upsert.mergeAndWrite(spark, tmp, seed, spec, fullSync = true, numBuckets = buckets)
+    Upsert.mergeAndWrite(spark, tmp, seed, spec, fullSync = true, numBuckets = Some(buckets))
 
     // part-file names per bucket dir: rewritten dirs get fresh names
     def listing: Map[String, Set[String]] = {
@@ -138,7 +138,7 @@ class UpsertSpec extends SparkSuite {
 
     Upsert.mergeAndWrite(spark,
       tmp, Seq(("rX", "ie1", "new")).toDF("id", "intellectual_entity_id", "v"),
-      spec, fullSync = false, numBuckets = buckets)
+      spec, fullSync = false, numBuckets = Some(buckets))
     val after = listing
 
     val touched = spark.range(1)
@@ -165,11 +165,11 @@ class UpsertSpec extends SparkSuite {
     val tmp = java.nio.file.Files.createTempDirectory("upsert-marker").toString + "/tbl"
     val spec = TableSpec("t.pk", Seq("v" -> ColType.Str)) // PK merge on id
     val seed = (1 to 200).map(i => (s"r$i", s"old$i")).toDF("id", "v")
-    Upsert.mergeAndWrite(spark, tmp, seed, spec, fullSync = true, numBuckets = 8)
+    Upsert.mergeAndWrite(spark, tmp, seed, spec, fullSync = true, numBuckets = Some(8))
     assert(new java.io.File(tmp, "_graft_buckets").isFile)
     val update = (1 to 200 by 2).map(i => (s"r$i", s"new$i")).toDF("id", "v")
     Upsert.mergeAndWrite(spark, tmp, update, spec, fullSync = false,
-      numBuckets = 64) // wrong on purpose
+      numBuckets = Some(64)) // wrong on purpose
     val out = spark.read.parquet(tmp).select("id", "v").collect()
       .map(r => r.getString(0) -> r.getString(1))
     assert(out.length === 200, "no duplicated or lost keys under a mismatched caller width")
@@ -188,7 +188,7 @@ class UpsertSpec extends SparkSuite {
       val tmp = java.nio.file.Files.createTempDirectory("upsert-badmk").toString + "/tbl"
       Upsert.mergeAndWrite(spark, tmp,
         (1 to 20).map(i => (s"r$i", s"old$i")).toDF("id", "v"),
-        spec, fullSync = true, numBuckets = 8)
+        spec, fullSync = true, numBuckets = Some(8))
       tmp
     }
     def corrupt(tmp: String, content: String): Unit =
@@ -205,7 +205,7 @@ class UpsertSpec extends SparkSuite {
       corrupt(tmp, bad)
       val e = intercept[IllegalStateException] {
         Upsert.mergeAndWrite(spark, tmp, update, spec,
-          fullSync = false, numBuckets = 8)
+          fullSync = false, numBuckets = Some(8))
       }
       assert(e.getMessage.contains("refusing incremental"))
       assert(new String(java.nio.file.Files.readAllBytes(
@@ -217,11 +217,136 @@ class UpsertSpec extends SparkSuite {
     val tmp = seedTarget()
     java.nio.file.Files.delete(java.nio.file.Paths.get(tmp, "_graft_buckets"))
     Upsert.mergeAndWrite(spark, tmp, update, spec,
-      fullSync = false, numBuckets = 8)
+      fullSync = false, numBuckets = Some(8))
     assert(new java.io.File(tmp, "_graft_buckets").isFile)
     val m = spark.read.parquet(tmp).select("id", "v").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(m("r1") == "new1" && m.size == 20)
+  }
+
+  private def marker(tbl: String): String =
+    new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(tbl, "_graft_buckets")), "UTF-8")
+
+  private def bucketDirs(tbl: String): Set[String] =
+    new java.io.File(tbl).listFiles().map(_.getName)
+      .filter(_.startsWith(s"${Upsert.BucketCol}=")).toSet
+
+  private def pkRows(tbl: String): Seq[(String, String)] =
+    spark.read.parquet(tbl).select("id", "v").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toSeq
+
+  test("a default write derives the floor from a small frame; a default " +
+    "incremental merge follows its marker") {
+    val s = spark
+    import s.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("upsert-derive").toString + "/tbl"
+    val spec = TableSpec("t.pk", Seq("v" -> ColType.Str))
+    val seed = (1 to 200).map(i => (s"r$i", s"old$i")).toDF("id", "v")
+    Upsert.mergeAndWrite(spark, tmp, seed, spec, fullSync = true)
+    assert(marker(tmp) == "4")
+    assert(bucketDirs(tmp).size == 4)
+    Upsert.mergeAndWrite(spark, tmp,
+      (1 to 200 by 2).map(i => (s"r$i", s"new$i")).toDF("id", "v"),
+      spec, fullSync = false)
+    assert(marker(tmp) == "4")
+    assert(bucketDirs(tmp).size == 4)
+    val out = pkRows(tmp)
+    assert(out.size == 200, "no duplicated or lost keys")
+    assert(out.toMap == (1 to 200).map(i =>
+      s"r$i" -> (if (i % 2 == 1) s"new$i" else s"old$i")).toMap)
+  }
+
+  test("an overflowing join estimate is capped at its leaves and still " +
+    "derives the floor") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions.col
+    val base = (1 to 200).map(i => (s"r$i", s"v$i")).toDF("id", "v")
+    val joined = (1 to 4).foldLeft(base) { (acc, k) =>
+      acc.join(base.select(col("id"), col("v").as(s"v$k")), "id")
+    }.select("id", "v")
+    // Each join multiplies its sides' estimates: uncapped, this plan
+    // would derive the 4096-bucket cap.
+    val estimate = joined.queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(Upsert.bucketsFor(estimate.min(Long.MaxValue).toLong) == 4096,
+      s"the plan estimate $estimate must overflow the derivation")
+    assert(Upsert.layoutBytes(joined).exists(_ < (32L << 20)))
+    val tmp = java.nio.file.Files.createTempDirectory("upsert-cap").toString + "/tbl"
+    val spec = TableSpec("t.pk", Seq("v" -> ColType.Str))
+    Upsert.mergeAndWrite(spark, tmp, joined, spec, fullSync = true)
+    assert(marker(tmp) == "4")
+    assert(pkRows(tmp).toSet == (1 to 200).map(i => (s"r$i", s"v$i")).toSet)
+    // Staged, the join becomes one leaf that inherits the overflowing
+    // estimate; the bytes its blocks hold size it instead.
+    val staged = Upsert.stage(joined)
+    val stagedEstimate = staged.queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(Upsert.bucketsFor(stagedEstimate.min(Long.MaxValue).toLong) == 4096,
+      s"the staged estimate $stagedEstimate must overflow the derivation")
+    Upsert.mergeAndWrite(spark, tmp, staged, spec, fullSync = true)
+    assert(marker(tmp) == "4")
+  }
+
+  test("a new layout of unknown size falls back to the legacy 64") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    val rdd = spark.sparkContext.parallelize(1 to 20).map(i => Row(s"r$i", s"v$i"))
+    val unsized = spark.createDataFrame(rdd, StructType(Seq(
+      StructField("id", StringType), StructField("v", StringType))))
+    assert(Upsert.layoutBytes(unsized).isEmpty)
+    val tmp = java.nio.file.Files.createTempDirectory("upsert-unsized").toString + "/tbl"
+    Upsert.mergeAndWrite(spark, tmp, unsized, TableSpec("t.pk", Seq("v" -> ColType.Str)),
+      fullSync = true)
+    assert(marker(tmp) == "64")
+  }
+
+  test("a full sync with the default re-lays a 64-bucket target out at " +
+    "the derived count; the next incremental merge loses and duplicates nothing") {
+    val s = spark
+    import s.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("upsert-relay").toString + "/tbl"
+    val spec = TableSpec("t.pk", Seq("v" -> ColType.Str))
+    Upsert.mergeAndWrite(spark, tmp,
+      (1 to 300).map(i => (s"r$i", s"old$i")).toDF("id", "v"),
+      spec, fullSync = true, numBuckets = Some(64))
+    assert(marker(tmp) == "64")
+    assert(bucketDirs(tmp).size > 32)
+    Upsert.mergeAndWrite(spark, tmp,
+      (1 to 200).map(i => (s"r$i", s"full$i")).toDF("id", "v"),
+      spec, fullSync = true)
+    assert(marker(tmp) == "4")
+    assert(bucketDirs(tmp).size == 4, "the old layout's directories must be gone")
+    assert(!new java.io.File(tmp + "__tmp").exists())
+    Upsert.mergeAndWrite(spark, tmp,
+      (101 to 250).map(i => (s"r$i", s"inc$i")).toDF("id", "v"),
+      spec, fullSync = false)
+    assert(marker(tmp) == "4")
+    val out = pkRows(tmp)
+    assert(out.size == 250, "no duplicated or lost keys")
+    assert(out.toMap == (1 to 250).map(i =>
+      s"r$i" -> (if (i <= 100) s"full$i" else s"inc$i")).toMap)
+  }
+
+  test("a pre-marker target merged with no count merges under the legacy " +
+    "64 and pins it") {
+    val s = spark
+    import s.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("upsert-legacy").toString + "/tbl"
+    val spec = TableSpec("t.pk", Seq("v" -> ColType.Str))
+    Upsert.mergeAndWrite(spark, tmp,
+      (1 to 200).map(i => (s"r$i", s"old$i")).toDF("id", "v"),
+      spec, fullSync = true, numBuckets = Some(Upsert.LegacyBuckets))
+    java.nio.file.Files.delete(java.nio.file.Paths.get(tmp, "_graft_buckets"))
+    // Merged under the derived floor instead, most keys would hash to a
+    // bucket other than the one holding their old row and be duplicated.
+    Upsert.mergeAndWrite(spark, tmp,
+      (1 to 200 by 2).map(i => (s"r$i", s"new$i")).toDF("id", "v"),
+      spec, fullSync = false)
+    assert(marker(tmp) == "64")
+    val out = pkRows(tmp)
+    assert(out.size == 200, "no duplicated or lost keys")
+    assert(out.toMap == (1 to 200).map(i =>
+      s"r$i" -> (if (i % 2 == 1) s"new$i" else s"old$i")).toMap)
   }
 
   test("bucketsFor derives one bucket per ~32 MB, floored and capped") {
@@ -230,8 +355,9 @@ class UpsertSpec extends SparkSuite {
     assert(Upsert.bucketsFor(32L << 20) == 4)
     // midpoint: exact multiples land on bytes/32MB
     assert(Upsert.bucketsFor(320L << 20) == 10)
-    // cap: a 1 PB expectation stays at 4096
+    // cap: a 1 PB expectation stays at 4096, and so does the largest
     assert(Upsert.bucketsFor(1L << 50) == 4096)
+    assert(Upsert.bucketsFor(Long.MaxValue) == 4096)
   }
 
   test("registry topo order puts every dep before its dependents") {
