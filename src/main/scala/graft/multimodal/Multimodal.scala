@@ -112,10 +112,11 @@ object Multimodal {
     * back to the AudioSystem path only when the ServiceLoader saw no
     * providers at all (an exotic platform). */
   private def openAudioStream(bytes: Array[Byte]): AudioInputStream = {
-    val in = new ByteArrayInputStream(bytes)
+    // A fresh stream per candidate: a reader that rejects the payload
+    // may have read or mark()ed it, so a shared stream's position is
+    // not trustworthy. The wrapper does not copy `bytes`.
     val hit = audioFileReaders.iterator.flatMap { r =>
-      in.reset() // back to byte 0 for each candidate reader
-      try Some(r.getAudioInputStream(in))
+      try Some(r.getAudioInputStream(new ByteArrayInputStream(bytes)))
       catch {
         case _: javax.sound.sampled.UnsupportedAudioFileException => None
       }

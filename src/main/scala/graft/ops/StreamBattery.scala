@@ -69,13 +69,6 @@ object StreamBattery {
     }
   }
 
-  /** Data-derived shuffle width for a replay feed: ~1 MB of feed
-    * parquet per partition, floored at 4 and capped at the session's
-    * core count. At sf0.1 every feed is well under 4 MB → width 4; at
-    * 90× the same feeds carry 90× the rows and derive back up to the
-    * full width — a fixed width would either pay store churn at sf
-    * scale or starve the 90× replay (both measured; see
-    * withShufflePartitions). */
   private[ops] def dirBytes(s: SparkSession, dir: String): Long =
     try {
       val p = new Path(dir)
@@ -83,11 +76,17 @@ object StreamBattery {
       fs.listStatus(p).filter(_.isFile).map(_.getLen).sum
     } catch { case _: Exception => 0L }
 
-  private[ops] def replayPartitions(s: SparkSession, feedDir: String): Int =
-    sys.env.get("GRAFT_REPLAY_PARTITIONS").flatMap(_.toIntOption).getOrElse {
-      val bytes = dirBytes(s, feedDir)
-      math.max(4, math.min(s.sparkContext.defaultParallelism, (bytes >> 20).toInt))
-    }
+  /** Data-derived shuffle width for a replay feed: ~1 MB of feed
+    * parquet per partition, floored at 4 and capped at the session's
+    * core count. At sf0.1 every feed is well under 4 MB → width 4; at
+    * 90× the same feeds carry 90× the rows and derive back up to the
+    * full width — a fixed width would either pay store churn at sf
+    * scale or starve the 90× replay (both measured; see
+    * withShufflePartitions). */
+  private[ops] def replayPartitions(s: SparkSession, feedDir: String): Int = {
+    val bytes = dirBytes(s, feedDir)
+    math.max(4, math.min(s.sparkContext.defaultParallelism, (bytes >> 20).toInt))
+  }
 
   private def writeSlice(df: DataFrame, dir: String, seq: Int): Unit = {
     val spark = df.sparkSession

@@ -1,5 +1,7 @@
 package graft.run
 
+import java.util.concurrent.{ExecutionException, FutureTask}
+
 /** Concurrent submission of INDEPENDENT Spark actions from one driver
   * (guide §2.6: actions are only sequential because driver code calls
   * them sequentially — independent jobs submitted together let the
@@ -20,80 +22,59 @@ package graft.run
   * pool management would buy nothing, and a FRESH thread inherits the
   * caller's Spark local properties (job group/description — Spark
   * keeps them in an InheritableThreadLocal) exactly like the
-  * subquery-execution threads do. Each branch's failure is rethrown on
-  * the caller thread with its original exception type once every
-  * branch has settled (no orphaned in-flight jobs on the failure
-  * path).
+  * subquery-execution threads do. Every branch is awaited before a
+  * join returns or throws, so no job of a fork group is left in flight
+  * on the failure path; the first failure in slot order (the calling
+  * thread's branch first) is then rethrown with its original exception
+  * type and any later failures are dropped.
   */
 object Par {
-
-  /** Measurement kill-switch: `GRAFT_PAR=0` degrades every join* to
-    * strictly sequential left-to-right execution on the calling
-    * thread, so the concurrency can be A/B-ed on ONE build (the same
-    * env-var ABAB protocol as `GRAFT_SPREAD_WIDTH`). The thunks are
-    * independent by contract, so order does not affect results. */
-  private val enabled: Boolean = sys.env.get("GRAFT_PAR").forall(_ != "0")
 
   /** Run both thunks concurrently (b on a fresh daemon thread, a on
     * the calling thread) and return both results. */
   def join2[A, B](a: () => A, b: () => B): (A, B) = {
-    if (!enabled) return (a(), b())
     val fb = fork(b)
-    val ra = runFirst(a, Seq(fb))
-    (ra, await(fb))
+    val ra = settle(a, Seq(fb))
+    (ra, fb.get())
   }
 
   /** Run all three thunks concurrently; see [[join2]]. */
   def join3[A, B, C](a: () => A, b: () => B, c: () => C): (A, B, C) = {
-    if (!enabled) return (a(), b(), c())
     val fb = fork(b); val fc = fork(c)
-    val ra = runFirst(a, Seq(fb, fc))
-    (ra, await(fb), await(fc))
+    val ra = settle(a, Seq(fb, fc))
+    (ra, fb.get(), fc.get())
   }
 
   /** Run all four thunks concurrently; see [[join2]]. */
   def join4[A, B, C, D](a: () => A, b: () => B, c: () => C,
                         d: () => D): (A, B, C, D) = {
-    if (!enabled) return (a(), b(), c(), d())
     val fb = fork(b); val fc = fork(c); val fd = fork(d)
-    val ra = runFirst(a, Seq(fb, fc, fd))
-    (ra, await(fb), await(fc), await(fd))
+    val ra = settle(a, Seq(fb, fc, fd))
+    (ra, fb.get(), fc.get(), fd.get())
   }
 
-  /** Run every thunk concurrently (head on the calling thread, rest on
-    * fresh daemon threads); results in input order. See [[join2]] for
-    * the failure contract. */
-  def joinAll[T](thunks: Seq[() => T]): Seq[T] = {
-    if (!enabled || thunks.sizeIs <= 1) return thunks.map(_())
-    val forked = thunks.tail.map(fork)
-    val r0 = runFirst(thunks.head, forked)
-    r0 +: forked.map(await)
-  }
-
-  private def fork[T](body: () => T): java.util.concurrent.FutureTask[T] = {
-    val task = new java.util.concurrent.FutureTask[T](() => body())
+  private def fork[T](body: () => T): FutureTask[T] = {
+    val task = new FutureTask[T](() => body())
     val t = new Thread(task, "graft-par")
     t.setDaemon(true)
     t.start()
     task
   }
 
-  /** Run the caller-thread branch; if it throws, still AWAIT the
-    * forked branches (ignoring their outcome) so no job of this fork
-    * group is left running when the exception propagates. */
-  private def runFirst[A](a: () => A,
-      forked: Seq[java.util.concurrent.FutureTask[_]]): A =
-    try a()
-    catch {
-      case e: Throwable =>
-        forked.foreach(f => try f.get() catch { case _: Throwable => () })
-        throw e
+  /** Run the caller-thread branch, then await EVERY forked branch
+    * whatever the outcomes, and only then rethrow the first failure
+    * (caller branch first, then forked slot order). On return every
+    * forked task has completed normally, so its `get()` does not
+    * block. */
+  private def settle[A](a: () => A, forked: Seq[FutureTask[_]]): A = {
+    val ra = try Right(a()) catch { case e: Throwable => Left(e) }
+    val failures = forked.flatMap { f =>
+      try { f.get(); None }
+      catch { case e: ExecutionException => Some(Option(e.getCause).getOrElse(e)) }
     }
-
-  private def await[T](f: java.util.concurrent.FutureTask[T]): T =
-    try f.get()
-    catch {
-      case e: java.util.concurrent.ExecutionException =>
-        throw Option(e.getCause).getOrElse(e)
+    ra match {
+      case Left(e) => throw e
+      case Right(r) => failures.headOption.foreach(e => throw e); r
     }
+  }
 }

@@ -173,7 +173,7 @@ object Similarity {
     *    sf-scale recall regime the oracle was calibrated on. Uniform
     *    embeddings (the oracle's worst case) still see recall track
     *    the scanned fraction — that is inherent to ANN, measured and
-    *    documented in BENCH_NOTES via PqDial; clustered corpora (the
+    *    documented in BENCH_NOTES; clustered corpora (the
     *    realistic regime) concentrate recall into few cells.
     */
   private[graft] def derivedCells(n: Long): Int =
@@ -252,6 +252,16 @@ object Similarity {
       if (matrixForced || seedMatrix != null) Some(chunkedMatrix) else None
   }
 
+  /** Skew-derived sub-group chunk modulus for a bucketed index:
+    * ⌈max-occupancy / (2 × mean)⌉ over `keys` groups, floor 1, cap 64. */
+  private[sim] def chunkModulus(df: DataFrame, keys: Seq[String]): Int = {
+    val occ = df.groupBy(keys.map(col): _*).agg(count(lit(1)).as("c"))
+      .agg(max(col("c")).as("mx"), avg(col("c")).as("mean")).head()
+    if (occ.isNullAt(0)) 1
+    else math.min(64, math.max(1,
+      math.ceil(occ.getLong(0) / (2.0 * occ.getDouble(1))).toInt))
+  }
+
   /** Chunked per-cell matrix shared by the three bulk kernels' build
     * side: entries hash-partitioned into `nChunks` sub-cell chunks by
     * id, grouped per (cell, chunk). The modulus derives from skew —
@@ -267,27 +277,6 @@ object Similarity {
     * contains it). Costs one small occupancy aggregation at first
     * materialization; the probe fan explodes × nChunks (bounded by
     * the cap). */
-  /** Skew-derived sub-group chunk modulus for a bucketed index:
-    * ⌈max-occupancy / (2 × mean)⌉ over `keys` groups, floor 1, cap 64.
-    * GRAFT_ANN_CHUNKS overrides (A/B and ops escape hatch, same
-    * precedent as GRAFT_REPLAY_PARTITIONS). */
-  private[sim] def chunkModulus(df: DataFrame, keys: Seq[String]): Int =
-    chunkModulus(df, keys, sys.env.get("GRAFT_ANN_CHUNKS").map(_.toInt))
-
-  /** Override-injectable body: the env escape hatch must be consulted
-    * BEFORE the occupancy aggregation so it also skips the Spark job
-    * it exists to bypass (the `.head()` forces a full group-by over
-    * the index table). */
-  private[sim] def chunkModulus(df: DataFrame, keys: Seq[String],
-                                overrideChunks: Option[Int]): Int =
-    overrideChunks.getOrElse {
-      val occ = df.groupBy(keys.map(col): _*).agg(count(lit(1)).as("c"))
-        .agg(max(col("c")).as("mx"), avg(col("c")).as("mean")).head()
-      if (occ.isNullAt(0)) 1
-      else math.min(64, math.max(1,
-        math.ceil(occ.getLong(0) / (2.0 * occ.getDouble(1))).toInt))
-    }
-
   private[sim] def chunkedCellMatrix(indexed: DataFrame,
                                      payload: String): (Int, DataFrame) = {
     val nChunks = chunkModulus(indexed, Seq("cell"))
@@ -801,7 +790,7 @@ object Similarity {
     // ~1% of the corpus survives ADC into the exact re-rank. A FIXED
     // shortlist saturates exactly like a fixed LSH plane count — at
     // 90× data, 32 of ~70k ADC candidates (0.05%) starved the re-rank
-    // to recall 0 (r13, PqDial). The r14 width: n/200 capped recall at
+    // to recall 0 (r13, BENCH_NOTES). The r14 width: n/200 capped recall at
     // 0.60 on the CLUSTERED 90× corpus — inside a tight cluster the
     // 4-bit ADC rank is noisy enough that true neighbors fall below
     // n/200, while n/100 (≈ one home cluster at K=100) measures

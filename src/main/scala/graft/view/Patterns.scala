@@ -98,27 +98,23 @@ object Patterns {
     * max(defaultParallelism, inflatedBytes/64 MB) so the frame also
     * lands in sanely-sized partitions at mid scales. Derived from data
     * size and core count — no constant tuned to either local mode or a
-    * cluster; `GRAFT_SPREAD_WIDTH` overrides for A/B runs (0 disables).
+    * cluster.
     */
-  private[graft] def spreadWidth(df: DataFrame, inflation: Long): Option[Int] =
-    sys.env.get("GRAFT_SPREAD_WIDTH").flatMap(_.toIntOption) match {
-      case Some(0) => None
-      case Some(n) => Some(n)
-      case None =>
-        val par = df.sparkSession.sparkContext.defaultParallelism
-        leafParquetBytes(df).flatMap { leafBytes =>
-          val maxSplit =
-            try df.sparkSession.sessionState.conf.filesMaxPartitionBytes
-            catch { case _: Exception => 128L << 20 }
-          val scanSplits = (leafBytes / BigInt(math.max(1L, maxSplit))).toLong + 1
-          if (scanSplits >= par) None
-          else {
-            val target = 64L << 20
-            val byBytes = (leafBytes * inflation / target).toLong + 1
-            Some(math.min(16384L, math.max(par.toLong, byBytes)).toInt)
-          }
-        }
+  private[graft] def spreadWidth(df: DataFrame, inflation: Long): Option[Int] = {
+    val par = df.sparkSession.sparkContext.defaultParallelism
+    leafParquetBytes(df).flatMap { leafBytes =>
+      val maxSplit =
+        try df.sparkSession.sessionState.conf.filesMaxPartitionBytes
+        catch { case _: Exception => 128L << 20 }
+      val scanSplits = (leafBytes / BigInt(math.max(1L, maxSplit))).toLong + 1
+      if (scanSplits >= par) None
+      else {
+        val target = 64L << 20
+        val byBytes = (leafBytes * inflation / target).toLong + 1
+        Some(math.min(16384L, math.max(par.toLong, byBytes)).toInt)
+      }
     }
+  }
 
   /** Round-robin repartition of a narrow input per [[spreadWidth]];
     * identity when the scan is already wide or stats are unknown.

@@ -104,4 +104,45 @@ class PlanAuditSpec extends SparkSuite {
         s"$q lost the WindowGroupLimit rewrite:\n$plan")
     }
   }
+
+  test("q_entity_families builds as one plan: no Spark job before the action") {
+    // The nine family frames must reach the final join as one logical
+    // plan so the shared melt scan and the label/base-match aggregates
+    // are planned once and ReuseExchange can share them. Materializing
+    // a family (checkpoint, count) while the query is built would show
+    // up here as a query-execution job submitted by `run` itself. The
+    // parquet reads' schema inference also runs a footer job, but
+    // outside any query execution, so it carries no execution id.
+    val sc = spark.sparkContext
+    val built = new java.util.concurrent.atomic.AtomicInteger(0)
+    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        def prop(k: String) = props.flatMap(p => Option(p.getProperty(k)))
+        prop("spark.jobGroup.id") match {
+          case Some("plan-audit-families")
+              if prop("spark.sql.execution.id").isDefined =>
+            built.incrementAndGet()
+          case Some("plan-audit-sentinel") => sentinelSeen.countDown()
+          case _ => ()
+        }
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("plan-audit-families", "build q_entity_families")
+      try Registry.byName("q_entity_families").run(spark, dir)
+      finally sc.clearJobGroup()
+      // The bus delivers events in order: once the sentinel job's start
+      // arrives, every job the build submitted has been counted.
+      sc.setJobGroup("plan-audit-sentinel", "listener bus flush")
+      try spark.range(1).count()
+      finally sc.clearJobGroup()
+      assert(sentinelSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(built.get() === 0,
+        s"building q_entity_families ran ${built.get()} query-execution jobs")
+    } finally sc.removeSparkListener(listener)
+  }
 }

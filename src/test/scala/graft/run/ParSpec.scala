@@ -34,6 +34,20 @@ class ParSpec extends AnyFunSuite {
     assert(e eq boom)
   }
 
+  test("forked-branch failure still awaits the sibling forked branches") {
+    val boom = new IllegalStateException("forked branch failed")
+    val siblingRan = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val e = intercept[IllegalStateException] {
+      Par.join3(
+        () => 1,
+        () => throw boom,
+        () => { Thread.sleep(200); siblingRan.set(true); 3 })
+    }
+    assert(e eq boom)
+    // join3 must not throw before the still-running sibling settled
+    assert(siblingRan.get())
+  }
+
   test("caller-branch failure still awaits the forked branches") {
     val forkedRan = new java.util.concurrent.atomic.AtomicBoolean(false)
     val e = intercept[IllegalArgumentException] {
